@@ -24,10 +24,22 @@ JSON values keyed by column NAME (the reference keys by column id
 with raw bytes); partition values are also kept inside the data files
 so reads need no partition-column reconstruction.
 
+Each manifest records the Spark schema of the DataFrame whose write
+produced its files (`"spark_schema"`, `StructType.jsonValue()`; every
+manifest comes from exactly one Spark write of one DataFrame), the way
+Iceberg keeps a table's schema in metadata rather than in the data
+files. Scans open their files under that schema (`_open`), so planning
+a read touches no parquet footer and launches no Spark job. A manifest
+without a recorded schema (a table written before manifests carried
+one, or a hand-built fixture) is the unknown-schema case: its files
+are opened with Spark's footer inference, which costs one Spark job
+per scan.
+
 Scale notes: file listing/pruning is metadata-only (no data I/O);
-the pruned file list feeds one `spark.read.parquet(*files)` — Spark
-then parallelizes over row groups. In production you'd use the real
-Iceberg connector; this exists for format parity with the reference.
+the pruned file list feeds one `spark.read.parquet(*files)` per
+(sequence number, schema) group — Spark then parallelizes over row
+groups. In production you'd use the real Iceberg connector; this
+exists for format parity with the reference.
 """
 
 from __future__ import annotations
@@ -41,6 +53,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 _OPS = {
     "=": lambda lo, hi, v: not (v < lo or v > hi),
@@ -187,7 +200,9 @@ class IcebergLiteTable:
         self, snapshot_id: int | None = None
     ) -> list[tuple[dict, int, str]]:
         """(file entry, sequence number, content) triples for a snapshot.
-        content ∈ {data, position_deletes, equality_deletes}."""
+        content ∈ {data, position_deletes, equality_deletes}. Each entry
+        carries its manifest's recorded Spark schema as `spark_schema`
+        (absent when the manifest has none)."""
         sid = snapshot_id if snapshot_id is not None else self.current_snapshot_id()
         snap = self._snapshot(sid)
         with open(os.path.join(self.path, snap["manifest_list"])) as f:
@@ -199,9 +214,10 @@ class IcebergLiteTable:
             seq = m.get("sequence_number", 0)
             content = m.get("content", "data")
             for entry in manifest.get("entries", []):
-                out.append(
-                    (entry.get("data_file") or entry["delete_file"], seq, content)
-                )
+                fe = entry.get("data_file") or entry["delete_file"]
+                if "spark_schema" in manifest:
+                    fe["spark_schema"] = manifest["spark_schema"]
+                out.append((fe, seq, content))
         return out
 
     # -- scan -------------------------------------------------------------
@@ -280,7 +296,7 @@ class IcebergLiteTable:
         pos_dels = [e for e, _s, c in triples if c == "position_deletes"]
         eq_dels = [(e, seq) for e, seq, c in triples if c == "equality_deletes"]
         m = ScanMetrics(files_total=len(files))
-        kept: list[tuple[str, int, int]] = []
+        kept: list[tuple[dict, int]] = []
         for df_entry, seq in files:
             part = df_entry.get("partition", {})
             if partition_filters and not all(
@@ -291,7 +307,7 @@ class IcebergLiteTable:
             if predicates and not self._stats_match(df_entry, predicates):
                 m.files_pruned_by_stats += 1
                 continue
-            kept.append((df_entry["file_path"], seq, df_entry.get("schema_id", 0)))
+            kept.append((df_entry, seq))
         m.files_scanned = len(kept)
         self.metrics = m
         if not kept:
@@ -299,7 +315,11 @@ class IcebergLiteTable:
             if not files:
                 raise ValueError(f"empty iceberg-lite table at {self.path}")
             any_entry = files[0][0]
-            df = spark.read.parquet(os.path.join(self.path, any_entry["file_path"]))
+            df = _open(
+                spark,
+                [os.path.join(self.path, any_entry["file_path"])],
+                any_entry.get("spark_schema"),
+            )
             cols = _mapped_cols(any_entry.get("schema_id", 0))
             if cols is not None:
                 df = df.select(*cols)
@@ -307,16 +327,19 @@ class IcebergLiteTable:
 
         need_meta = bool(pos_dels) or bool(eq_dels)
         # group kept files by (sequence number, write schema) so
-        # equality deletes can respect the data-seq < delete-seq rule
-        # and each group gets one id-based projection
-        by_seq: dict[tuple[int, int], list[str]] = {}
-        for rel, seq, schema_id in kept:
-            by_seq.setdefault((seq, schema_id), []).append(
-                os.path.join(self.path, rel)
+        # equality deletes can respect the data-seq < delete-seq rule,
+        # each group gets one id-based projection, and each group's
+        # files share one recorded Spark schema (one scan per group)
+        by_seq: dict[tuple[int, int, str], tuple[dict | None, list[str]]] = {}
+        for e, seq in kept:
+            ss = e.get("spark_schema")
+            key = (seq, e.get("schema_id", 0), json.dumps(ss, sort_keys=True))
+            by_seq.setdefault(key, (ss, []))[1].append(
+                os.path.join(self.path, e["file_path"])
             )
         parts = []
-        for (seq, schema_id), paths in sorted(by_seq.items()):
-            df = spark.read.parquet(*paths)
+        for (seq, schema_id, _), (ss, paths) in sorted(by_seq.items()):
+            df = _open(spark, paths, ss)
             cols = _mapped_cols(schema_id)
             base = cols if cols is not None else ["*"]
             if need_meta:
@@ -338,13 +361,18 @@ class IcebergLiteTable:
         if pos_dels:
             # delete keys reference files by the same absolute URI the
             # scan's _metadata produces (written from a live scan)
-            del_paths = [os.path.join(self.path, e["file_path"]) for e in pos_dels]
-            dels = spark.read.parquet(*del_paths).select(
-                F.col("file_path").alias("__file"), F.col("pos").alias("__pos")
-            )
+            dels = _open_all(
+                spark,
+                [
+                    (os.path.join(self.path, e["file_path"]), e.get("spark_schema"))
+                    for e in pos_dels
+                ],
+            ).select(F.col("file_path").alias("__file"), F.col("pos").alias("__pos"))
             out = out.join(F.broadcast(dels), ["__file", "__pos"], "left_anti")
         for e, dseq in sorted(eq_dels, key=lambda t: t[1]):
-            keys = spark.read.parquet(os.path.join(self.path, e["file_path"]))
+            keys = _open(
+                spark, [os.path.join(self.path, e["file_path"])], e.get("spark_schema")
+            )
             cols = e["equality_columns"]
             # schema-tracked tables resolve key columns through FIELD
             # IDS: the key file is written under its era's names, but
@@ -438,7 +466,7 @@ class IcebergLiteTable:
         snap = self._snapshot(to_sid)
         with open(os.path.join(self.path, snap["manifest_list"])) as f:
             manifests = json.load(f)
-        paths: list[str] = []
+        files: list[tuple[str, dict | None]] = []
         for m in manifests:
             if m.get("content", "data") != "data":
                 continue
@@ -447,16 +475,24 @@ class IcebergLiteTable:
             with open(os.path.join(self.path, m["manifest_path"])) as f:
                 manifest = json.load(f)
             for entry in manifest.get("entries", []):
-                paths.append(os.path.join(self.path, entry["data_file"]["file_path"]))
-        self.metrics = ScanMetrics(files_total=len(paths), files_scanned=len(paths))
-        if not paths:
+                files.append(
+                    (
+                        os.path.join(self.path, entry["data_file"]["file_path"]),
+                        manifest.get("spark_schema"),
+                    )
+                )
+        self.metrics = ScanMetrics(files_total=len(files), files_scanned=len(files))
+        if not files:
             any_files = self.data_files(to_sid)
             if not any_files:
                 raise ValueError(f"empty iceberg-lite table at {self.path}")
-            return spark.read.parquet(
-                os.path.join(self.path, any_files[0]["file_path"])
+            first = any_files[0]
+            return _open(
+                spark,
+                [os.path.join(self.path, first["file_path"])],
+                first.get("spark_schema"),
             ).limit(0)
-        return spark.read.parquet(*paths)
+        return _open_all(spark, files)
 
     @staticmethod
     def _stats_match(df_entry: dict, predicates) -> bool:
@@ -470,6 +506,37 @@ class IcebergLiteTable:
         return True
 
 
+def _open(spark: SparkSession, paths: list[str], spark_schema: dict | None) -> DataFrame:
+    """One parquet scan of `paths` under their manifest's recorded Spark
+    schema: no footer is read and no Spark job runs while planning.
+    Without a recorded schema Spark infers one from a footer, which
+    launches a job."""
+    reader = spark.read
+    if spark_schema is not None:
+        reader = reader.schema(StructType.fromJson(spark_schema))
+    return reader.parquet(*paths)
+
+
+def _open_all(
+    spark: SparkSession,
+    files: list[tuple[str, dict | None]],
+    project=lambda df: df,
+) -> DataFrame:
+    """Scan (path, recorded schema) pairs that may span manifests: one
+    `_open` per distinct schema, each passed through `project` (which
+    may use the scan's `_metadata` columns), unioned by name. Columns a
+    group lacks read as NULL. Tables whose manifests share one schema,
+    the usual case, get a single scan."""
+    groups: dict[str, tuple[dict | None, list[str]]] = {}
+    for p, ss in files:
+        groups.setdefault(json.dumps(ss, sort_keys=True), (ss, []))[1].append(p)
+    parts = [project(_open(spark, paths, ss)) for ss, paths in groups.values()]
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p, allowMissingColumns=True)
+    return out
+
+
 def _append_snapshot_files(
     path: str,
     entries: list[dict],
@@ -477,12 +544,17 @@ def _append_snapshot_files(
     operation: str,
     replace: bool = False,
     branch: str = "main",
+    spark_schema: dict | None = None,
 ) -> int:
     """Chain a new snapshot whose manifest holds `entries` of `content`
     kind onto the current table state; returns the new snapshot id.
     With replace=True the new manifest REPLACES all prior manifests
-    (compaction / rewrite_data_files) instead of accumulating."""
-    return _append_snapshot_manifests(path, [(entries, content)], operation, replace, branch)
+    (compaction / rewrite_data_files) instead of accumulating.
+    `spark_schema` is the Spark schema the entries' files were written
+    under, recorded in the manifest for scans to open them with."""
+    return _append_snapshot_manifests(
+        path, [(entries, content, spark_schema)], operation, replace, branch
+    )
 
 
 @contextmanager
@@ -524,7 +596,7 @@ def _commit_lock(path: str):
 
 def _append_snapshot_manifests(
     path: str,
-    manifest_groups: list[tuple[list[dict], str]],
+    manifest_groups: list[tuple[list[dict], str, dict | None]],
     operation: str,
     replace: bool = False,
     branch: str = "main",
@@ -532,8 +604,9 @@ def _append_snapshot_manifests(
     """Commit ONE snapshot carrying several manifests (e.g. a MERGE's
     equality-delete manifest + data manifest, which must share a
     sequence number so the delete exempts its own snapshot's rows).
-    The whole read-state→write→advance-pointer transaction runs under
-    the table commit lock (see _commit_lock)."""
+    Each group is (entries, content, recorded Spark schema). The whole
+    read-state→write→advance-pointer transaction runs under the table
+    commit lock (see _commit_lock)."""
     with _commit_lock(path):
         return _append_snapshot_manifests_locked(
             path, manifest_groups, operation, replace, branch
@@ -542,7 +615,7 @@ def _append_snapshot_manifests(
 
 def _append_snapshot_manifests_locked(
     path: str,
-    manifest_groups: list[tuple[list[dict], str]],
+    manifest_groups: list[tuple[list[dict], str, dict | None]],
     operation: str,
     replace: bool = False,
     branch: str = "main",
@@ -573,18 +646,21 @@ def _append_snapshot_manifests_locked(
         # schema it was written under so id-based read resolution can
         # map its columns forever (Iceberg writes field ids into the
         # parquet itself; here the manifest carries the schema id)
-        for entries, content in manifest_groups:
+        for entries, content, _ in manifest_groups:
             if content == "data":
                 for e in entries:
                     fe = e.get("data_file")
                     if fe is not None and "schema_id" not in fe:
                         fe["schema_id"] = cur_schema_id
     manifests = list(prev_manifests)
-    for gi, (entries, content) in enumerate(manifest_groups):
+    for gi, (entries, content, spark_schema) in enumerate(manifest_groups):
         suffix = f"-{gi}" if len(manifest_groups) > 1 else ""
         manifest_rel = f"metadata/manifest-{snapshot_id}{suffix}.json"
+        manifest = {"entries": entries}
+        if spark_schema is not None:
+            manifest["spark_schema"] = spark_schema
         with open(os.path.join(path, manifest_rel), "w") as f:
-            json.dump({"entries": entries}, f)
+            json.dump(manifest, f)
         manifests.append(
             {
                 "manifest_path": manifest_rel,
@@ -680,14 +756,18 @@ def write_position_deletes(
     table = IcebergLiteTable(path)
     # scan raw data files with metadata columns: the (file, pos) keys
     # are exactly what the condition matches in the current snapshot
-    triples = table._files_with_meta()
-    data_paths = [
-        os.path.join(path, e["file_path"]) for e, _s, c in triples if c == "data"
-    ]
-    raw = spark.read.parquet(*data_paths).select(
-        F.col("_metadata.file_path").alias("file_path"),
-        F.col("_metadata.row_index").alias("pos"),
-        "*",
+    raw = _open_all(
+        spark,
+        [
+            (os.path.join(path, e["file_path"]), e.get("spark_schema"))
+            for e, _s, c in table._files_with_meta()
+            if c == "data"
+        ],
+        lambda df: df.select(
+            F.col("_metadata.file_path").alias("file_path"),
+            F.col("_metadata.row_index").alias("pos"),
+            "*",
+        ),
     )
     keys = raw.filter(condition).select("file_path", "pos")
     rel = f"data/delete-pos-{table.current_snapshot_id() + 1}-{uuid.uuid4().hex[:8]}"
@@ -701,7 +781,9 @@ def write_position_deletes(
             "file_size_in_bytes": size,
         }
     }
-    return _append_snapshot_files(path, [entry], "position_deletes", "delete")
+    return _append_snapshot_files(
+        path, [entry], "position_deletes", "delete", spark_schema=keys.schema.jsonValue()
+    )
 
 
 def write_equality_deletes(
@@ -740,7 +822,9 @@ def write_equality_deletes(
                 f"equality-delete columns {missing} not in current schema"
             )
         entry["delete_file"]["equality_ids"] = [by_name[c] for c in columns]
-    return _append_snapshot_files(path, [entry], "equality_deletes", "delete")
+    return _append_snapshot_files(
+        path, [entry], "equality_deletes", "delete", spark_schema=keys.schema.jsonValue()
+    )
 
 
 def upsert_snapshot(
@@ -803,7 +887,10 @@ def upsert_snapshot(
     data_entries = _write_data_entries(df, path, snapshot_id, partition_by, stats_columns)
     return _append_snapshot_manifests(
         path,
-        [([del_entry], "equality_deletes"), (data_entries, "data")],
+        [
+            ([del_entry], "equality_deletes", keys.schema.jsonValue()),
+            (data_entries, "data", df.schema.jsonValue()),
+        ],
         "overwrite",
     )
 
@@ -1153,7 +1240,9 @@ def write_snapshot(
     snapshot_id = (prev_id or 0) + 1
 
     entries = _write_data_entries(df, path, snapshot_id, partition_by, stats_columns)
-    return _append_snapshot_files(path, entries, "data", "append", branch=branch)
+    return _append_snapshot_files(
+        path, entries, "data", "append", branch=branch, spark_schema=df.schema.jsonValue()
+    )
 
 
 def _json_scalar(v):
@@ -1295,7 +1384,9 @@ def compact(
     df = table.read(spark)
     snapshot_id = (table.current_snapshot_id() or 0) + 1
     entries = _write_data_entries(df, path, snapshot_id, partition_by, stats_columns)
-    return _append_snapshot_files(path, entries, "data", "replace", replace=True)
+    return _append_snapshot_files(
+        path, entries, "data", "replace", replace=True, spark_schema=df.schema.jsonValue()
+    )
 
 
 @dataclass

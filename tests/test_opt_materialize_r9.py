@@ -48,6 +48,17 @@ def test_table_bytes_reads_disk_size(sf_smoke):
     assert table_bytes(sf_smoke, "no_such_table") is None
 
 
+def test_table_bytes_unknown_for_directory_without_parquet(tmp_path):
+    # a table directory holding only sidecars (an interrupted write) has
+    # no known size; 0 would send both size gates to their unsafe sides
+    d = tmp_path / "lineitem.parquet"
+    d.mkdir()
+    (d / "_SUCCESS").write_text("")
+    assert table_bytes(str(tmp_path), "lineitem") is None
+    (d / "part-0.parquet").write_bytes(b"x" * 10)
+    assert table_bytes(str(tmp_path), "lineitem") == 10
+
+
 def test_gate_off_below_threshold(spark, sf_smoke, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE_MIN_BYTES", str(1 << 40))
     (lineitem,) = tables(spark, sf_smoke, "lineitem")
