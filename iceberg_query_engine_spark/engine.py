@@ -201,14 +201,6 @@ def _fmt_json(res: QueryResult) -> str:
     )
 
 
-_FORMATS = {
-    "table": lambda res: _fmt_table(res),
-    "vertical": lambda res: _fmt_vertical(res),
-    "csv": _fmt_csv,
-    "json": _fmt_json,
-}
-
-
 def _fmt_table(res: QueryResult, max_rows: int = 50) -> str:
     names = [c for c, _ in res.schema]
     shown = res.rows[:max_rows]
@@ -224,6 +216,30 @@ def _fmt_table(res: QueryResult, max_rows: int = 50) -> str:
     out.append(line)
     out.append(f"{res.row_count} rows ({res.metrics.total_ms:.1f} ms)")
     return "\n".join(out)
+
+
+_FORMATS = {
+    "table": _fmt_table,
+    "vertical": _fmt_vertical,
+    "csv": _fmt_csv,
+    "json": _fmt_json,
+}
+
+
+def _collect(df, plan: bool) -> QueryResult:
+    """Collect a CLI query's rows, timing the action; `plan` prints the
+    formatted physical plan first."""
+    if plan:
+        df.explain(mode="formatted")
+    t0 = time.perf_counter()
+    rows = df.collect()
+    ms = (time.perf_counter() - t0) * 1000
+    return QueryResult(
+        rows=rows,
+        schema=[(f.name, f.dataType.simpleString()) for f in df.schema.fields],
+        row_count=len(rows),
+        metrics=QueryMetrics(total_ms=ms, execute_ms=ms),
+    )
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -356,19 +372,7 @@ def main(argv: list[str] | None = None) -> int:
             from .queries import tpch
 
             fn = tpch.QUERIES[f"q{args.num}"]
-        df = fn(eng.spark, args.sf_dir)
-        if args.plan:
-            df.explain(mode="formatted")
-        t0 = time.perf_counter()
-        rows = df.collect()
-        ms = (time.perf_counter() - t0) * 1000
-        res = QueryResult(
-            rows=rows,
-            schema=[(f.name, f.dataType.simpleString()) for f in df.schema.fields],
-            row_count=len(rows),
-            metrics=QueryMetrics(total_ms=ms, execute_ms=ms),
-        )
-        print(_fmt_table(res))
+        print(_fmt_table(_collect(fn(eng.spark, args.sf_dir), args.plan)))
     elif args.cmd == "run":
         from .queries import catalog as _catalog
 
@@ -386,18 +390,7 @@ def main(argv: list[str] | None = None) -> int:
                 + (f" (close: {', '.join(near[:5])})" if near else "")
             )
             return 2
-        df = qs[args.name](eng.spark, args.sf_dir)
-        if args.plan:
-            df.explain(mode="formatted")
-        t0 = time.perf_counter()
-        rows = df.collect()
-        ms = (time.perf_counter() - t0) * 1000
-        res = QueryResult(
-            rows=rows,
-            schema=[(f.name, f.dataType.simpleString()) for f in df.schema.fields],
-            row_count=len(rows),
-            metrics=QueryMetrics(total_ms=ms, execute_ms=ms),
-        )
+        res = _collect(qs[args.name](eng.spark, args.sf_dir), args.plan)
         print(_FORMATS[args.format](res))
     elif args.cmd == "tables":
         for t in eng.tables():

@@ -562,8 +562,6 @@ CC_LOCAL_EDGE_GATE = 100_000
 def cc_labels(
     edges: DataFrame,
     cc_spill_dir: str | None = None,
-    on_round=None,
-    local_edge_gate: int | None = None,
 ) -> DataFrame:
     """Connected-component labels (node, label = min reachable id)
     over a SYMMETRIC (src, dst) edge list — hash-min label propagation
@@ -571,9 +569,9 @@ def cc_labels(
     kNN-graph clustering (similarity_suite.sim_knn_clusters). See
     dedup_clusters' docstring for the algorithm and scale notes.
 
-    Toy-scale gate: at or below `local_edge_gate` edges (default
-    CC_LOCAL_EDGE_GATE) the edge list is collected (bounded: ≤ ~3 MB)
-    and labeled by a driver-local union-find — identical output, none
+    Toy-scale gate: at or below CC_LOCAL_EDGE_GATE edges the edge list
+    is collected (bounded: ≤ ~3 MB) and labeled by a driver-local
+    union-find — identical output, none
     of the per-round job overhead that dominates small graphs. Above
     the gate the distributed rounds run unchanged; both paths are
     bit-parity-tested (tests/test_knn_join.py).
@@ -584,19 +582,11 @@ def cc_labels(
     so repeated invocations leave nothing behind. On a multi-node
     cluster point it at storage every executor can reach (the warehouse
     path or spark.local.dir is NOT shared); the default tempdir is
-    correct only for local mode.
-
-    on_round: optional callable(round_index, wall_seconds) observability
-    hook, called after each propagation round — the per-round flatness
-    signal a production operator (and the scale experiments) watch to
-    confirm the spill path is severing lineage (distributed path only)."""
-    import time as _time
-
+    correct only for local mode."""
     edges = edges.repartition("src").localCheckpoint()
 
-    gate = CC_LOCAL_EDGE_GATE if local_edge_gate is None else local_edge_gate
     # count on the materialized blocks: one trivial job, no recompute
-    if edges.count() <= gate:
+    if edges.count() <= CC_LOCAL_EDGE_GATE:
         return _cc_labels_local(edges)
 
     labels = (
@@ -621,7 +611,6 @@ def cc_labels(
     prev_sum = _label_sum(labels)
     try:
         for rnd in range(50):
-            rnd_t0 = _time.perf_counter()
             msgs = edges.join(labels, edges.src == labels.node).select(
                 F.col("dst").alias("node"), "label"
             )
@@ -673,8 +662,6 @@ def cc_labels(
                 new_labels.write.mode("overwrite").parquet(path)
                 labels = spark.read.parquet(path)
             cur_sum = _label_sum(labels)
-            if on_round is not None:
-                on_round(rnd, _time.perf_counter() - rnd_t0)
             if cur_sum == prev_sum:
                 break
             prev_sum = cur_sum
@@ -2191,18 +2178,6 @@ def dedup_pipeline_delta_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pipeline_delta_indexed(spark, sf_dir, PIPE_DELTA_SPLIT)
 
 
-def _pipeline_delta_indexed(
-    spark: SparkSession,
-    sf_dir: str,
-    split: float,
-    index_dir: str | None = None,
-) -> DataFrame:
-    batch, exact, near, contaminated = _pipeline_delta_indexed_stages(
-        spark, sf_dir, split, index_dir=index_dir
-    )
-    return _delta_ledger(batch, exact, near, contaminated)
-
-
 def _read_store_pruned(
     spark: SparkSession,
     path: str,
@@ -2231,15 +2206,12 @@ def _read_store_pruned(
     return df
 
 
-def _pipeline_delta_indexed_stages(
+def _pipeline_delta_indexed(
     spark: SparkSession,
     sf_dir: str,
     split: float,
     index_dir: str | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """The indexed delta's stage frames (batch, exact, near,
-    contaminated) — split out so experiments can time each probe
-    in isolation (data/exp_pipeline_delta_idx2_r9.py)."""
+) -> DataFrame:
     from ..sources.registry import table_rows
 
     (documents,) = tables(spark, sf_dir, "documents")
@@ -2286,8 +2258,10 @@ def _pipeline_delta_indexed_stages(
         )
 
     eval_shingles = spark.read.parquet(os.path.join(idx, "eval_shingles"))
-    return _delta_stages_from_stores(
-        spark, documents, batch, t, batch_docs, hashes_for, bands_for, eval_shingles
+    return _delta_ledger(
+        *_delta_stages_from_stores(
+            spark, documents, batch, t, batch_docs, hashes_for, bands_for, eval_shingles
+        )
     )
 
 
@@ -2620,11 +2594,12 @@ DEDUP_PIPELINE_DELTA_SQL = _delta_range_sql("t", "n + 1") + "\nORDER BY d.doc_id
 STREAM_SCRUB_CHUNKS = 3
 
 
-def _stream_scrub_sql(chunks: int = STREAM_SCRUB_CHUNKS) -> str:
+def _stream_scrub_sql() -> str:
     """Sequential-visibility oracle for the streaming landing scrub:
     one delta-range ledger per chunk, unioned. Chunk k covers
     [t + (n-t)·k/K, t + (n-t)·(k+1)/K) in integer arithmetic —
     mirrored exactly by streaming/scrub.py's Python cuts."""
+    chunks = STREAM_SCRUB_CHUNKS
     parts = []
     for k in range(chunks):
         lo = f"t + ((n - t) * {k}) // {chunks}"

@@ -486,7 +486,6 @@ def _f_hash_oracle() -> str:
 
 # --------------------------------------------------------------------------
 # f_url — URL family (no DuckDB equivalent → literal oracle)
-URL_TEMPLATE = "https://example.com:8080/path/{0}?q={1}&lang=en#frag{2}"
 
 
 def f_url(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -600,23 +600,13 @@ def _lsh_topk(
     vector crosses Arrow once with its bucket id, and the kernel masks
     per query before the partial top-k. Same candidate set and
     tie-break as the bucket-equality join it replaces."""
-    import os
-
     import numpy as np
 
     from ..functions.vector import multi_query_topk_fn
+    from ..sources.registry import table_bytes
 
     (embeddings,) = tables(spark, sf_dir, "embeddings")
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    if os.path.isdir(path):
-        corpus_bytes = sum(
-            os.path.getsize(os.path.join(dp, fn))
-            for dp, _d, fns in os.walk(path)
-            for fn in fns
-        )
-    else:
-        corpus_bytes = os.path.getsize(path) if os.path.exists(path) else 0
-    hof = corpus_bytes < _LSH_CODEGEN_MIN_BYTES
+    hof = (table_bytes(sf_dir, "embeddings") or 0) < _LSH_CODEGEN_MIN_BYTES
     e = embeddings.select(
         "vec_id",
         _as_double(F.col("embedding")).alias("v"),
@@ -2090,7 +2080,7 @@ def _knn_graph_multiprobe(
     # the full corpus): the per-cell kernel computes each left row's
     # top-k independently, so filtered rows' neighbor lists are
     # bit-identical to the full build's — the sampled-recall trick
-    # proven in data/exp_recall_1m_r9.py
+    # measured in data/exp_recall_1m_r9.json
     lhs = probed.filter(left_filter) if left_filter is not None else probed
     left = lhs.select(
         F.col("vec_id").alias("l_id"),

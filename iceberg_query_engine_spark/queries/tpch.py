@@ -95,9 +95,9 @@ def tables(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
 # while the materialization barrier serializes the stage graph and
 # pays cache write/read (measured r9-opt at sf0.1: persist cost
 # 1.2-3x on ev_dau_wau_mau/op_ks_test/op_freq_itemsets — the same
-# lesson as the reverted corpus-wide respread). Parameterised via env;
-# the local default keeps the driver bench comparable and the
-# production value is argued in OPTIMIZATION_r09.md.
+# lesson as the reverted corpus-wide respread). The local default keeps
+# the driver bench comparable; the production value is argued in
+# OPTIMIZATION_r09.md.
 MATERIALIZE_MIN_BYTES = 256 << 20
 
 # Broadcast-HINT gate (r9 verdict, What's wrong #1): F.broadcast() is
@@ -110,15 +110,6 @@ MATERIALIZE_MIN_BYTES = 256 << 20
 # make from fresh estimates (a persisted frame's RDD-backed stats hide
 # them); above it, no hint — the planner/AQE pick from real sizes.
 BROADCAST_HINT_MAX_SOURCE_BYTES = 1 << 30
-
-
-def _env_bytes(var: str, default: int) -> int:
-    """Env-overridable byte threshold; malformed values fall back to the
-    default instead of failing the query (r9 ADVICE, low)."""
-    try:
-        return int(os.environ.get(var, default))
-    except (TypeError, ValueError):
-        return default
 
 
 def _source_bytes(sf_dir: str, source_tables: tuple[str, ...]) -> int | None:
@@ -171,9 +162,8 @@ def persist_if_large(df: DataFrame, sf_dir: str, *source_tables: str) -> DataFra
     back-to-back must clearCache() (bench.py, oracle_sweep.py do) or
     call release_gated_persists() between queries, or caches
     accumulate across the session."""
-    threshold = _env_bytes("SPARK_GRAFT_MATERIALIZE_MIN_BYTES", MATERIALIZE_MIN_BYTES)
     total = _source_bytes(sf_dir, source_tables)
-    if total is None or total >= threshold:
+    if total is None or total >= MATERIALIZE_MIN_BYTES:
         from pyspark import StorageLevel
 
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
@@ -191,11 +181,8 @@ def broadcast_if_small(df: DataFrame, sf_dir: str, *source_tables: str) -> DataF
     fallback — a user-count- or vocabulary-sized frame at 100 TB is not
     broadcastable and a hard hint OOMs the build side instead of
     degrading gracefully."""
-    threshold = _env_bytes(
-        "SPARK_GRAFT_BROADCAST_HINT_MAX_BYTES", BROADCAST_HINT_MAX_SOURCE_BYTES
-    )
     total = _source_bytes(sf_dir, source_tables)
-    if total is not None and total <= threshold:
+    if total is not None and total <= BROADCAST_HINT_MAX_SOURCE_BYTES:
         return F.broadcast(df)
     return df
 

@@ -38,7 +38,9 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import DEFAULT_CPUS
 from ..sources.generator import generate_tpch_full
+from ..sources.registry import table_bytes
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 FULL_DATA_ROOT = os.path.join(REPO_ROOT, "data", "tpch_full")
@@ -91,8 +93,8 @@ def ensure_full_data(spark: SparkSession, sf_dir: str, layout: str = "flat") -> 
     ``layout`` names what the CALLER will read (ADVICE r5): with
     ``"bucketed"`` a fact table counts as present if its bucketed
     warehouse copy exists even when the flat parquet doesn't — at bench
-    scale the flat fact files are reclaimed once the catalog layout is
-    built (sf100's flat+bucketed facts together exceed this VM's disk).
+    scale the flat fact files may be deleted once the catalog layout is
+    built (sf100's flat+bucketed facts together exceed a single disk).
     With the default ``"flat"`` a reclaimed flat fact is genuinely
     missing and gets regenerated, so flat consumers (``_register``,
     ``bench_scale --layout flat``) never hit a missing path."""
@@ -151,15 +153,6 @@ BUCKET_SPECS: dict[str, list[str]] = {
 BUCKET_SHUFFLE_MAX_BYTES = 8 << 30
 
 
-def _table_bytes(path: str) -> int:
-    if os.path.isdir(path):
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-        return total
-    return os.path.getsize(path) if os.path.exists(path) else 0
-
-
 _BUCKET_SIDECAR = "_bucket_count"
 
 
@@ -200,13 +193,7 @@ def pick_bucket_count(data_dir: str, floor: int = 64) -> int:
     doubles to 128 so the one-file-per-bucket sorted write and the
     per-bucket scan tasks keep the same ~constant rows-per-task a
     cluster deployment targets, instead of growing with sf."""
-    path = os.path.join(data_dir, "lineitem.parquet")
-    total = 0
-    if os.path.isdir(path):
-        for root, _dirs, files in os.walk(path):
-            total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-    elif os.path.exists(path):
-        total = os.path.getsize(path)
+    total = table_bytes(data_dir, "lineitem") or 0
     buckets = floor
     while buckets * 256 * 1024 * 1024 < total:
         buckets *= 2
@@ -218,9 +205,6 @@ def register_catalog_layout(
     data_dir: str,
     sf_name: str,
     buckets: int | None = None,
-    analyze: bool = True,
-    only: set[str] | None = None,
-    reclaim_flat: bool = False,
 ) -> str:
     """Register the full schema as CATALOG tables — fact tables
     bucketed+sorted on their join keys, dimensions external — and feed
@@ -242,22 +226,12 @@ def register_catalog_layout(
     Idempotent per process; the bucketed write happens once per
     warehouse (re-registered from the existing files on later
     sessions via CREATE TABLE ... CLUSTERED BY ... LOCATION).
-
-    ``only`` restricts the pass to a table subset and ``reclaim_flat``
-    deletes a fact's FLAT parquet once its bucketed copy is written and
-    analyzed — together they let an sf100-scale ingest run one fact at
-    a time within a single-disk budget (flat+bucketed lineitem alone is
-    ~38 GB; all facts both ways would be ~50 GB — what r5 did by hand).
     """
-    import shutil
-
     if buckets is None:
         buckets = pick_bucket_count(data_dir)
     db = f"tpch_{sf_name.replace('.', '_')}"
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
     for t in FULL_TABLES:
-        if only is not None and t not in only:
-            continue
         full = f"{db}.{t}"
         if spark.catalog.tableExists(full):
             continue
@@ -291,7 +265,7 @@ def register_catalog_layout(
                     f"SORTED BY ({', '.join(cols)}) INTO {t_buckets} BUCKETS "
                     f"LOCATION '{loc}'"
                 )
-            elif _table_bytes(path) <= BUCKET_SHUFFLE_MAX_BYTES:
+            elif (table_bytes(data_dir, t) or 0) <= BUCKET_SHUFFLE_MAX_BYTES:
                 # one file per bucket so sorted-bucket scans stay sorted
                 src = spark.read.parquet(path)
                 (
@@ -315,7 +289,7 @@ def register_catalog_layout(
                 # count without any shuffle.
                 src = spark.read.parquet(path)
                 (
-                    src.coalesce(2 * int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+                    src.coalesce(2 * int(DEFAULT_CPUS))
                     .write.bucketBy(buckets, *cols)
                     .sortBy(*cols)
                     .saveAsTable(full)
@@ -323,13 +297,7 @@ def register_catalog_layout(
                 _write_bucket_sidecar(loc, buckets)
         else:
             spark.sql(f"CREATE TABLE {full} USING parquet LOCATION '{path}'")
-        if analyze:
-            spark.sql(f"ANALYZE TABLE {full} COMPUTE STATISTICS FOR ALL COLUMNS")
-        if reclaim_flat and t in BUCKET_SPECS and os.path.exists(path):
-            # bucketed copy is written+analyzed; the flat fact is now
-            # redundant (ensure_full_data(layout="flat") regenerates it
-            # on demand for flat consumers)
-            shutil.rmtree(path) if os.path.isdir(path) else os.remove(path)
+        spark.sql(f"ANALYZE TABLE {full} COMPUTE STATISTICS FOR ALL COLUMNS")
     spark.catalog.setCurrentDatabase(db)
     for t in FULL_TABLES:
         try:

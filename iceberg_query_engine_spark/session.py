@@ -80,14 +80,14 @@ def get_spark(
 def corpus_bytes(data_dir: str) -> int:
     """Total bytes under a data directory (parquet files only) — the
     size signal `tune_for_corpus` keys its thresholds off."""
+    from .sources.registry import _parquet_files
+
     total = 0
-    for root, _dirs, files in os.walk(data_dir):
-        for f in files:
-            if f.endswith(".parquet") or f.endswith(".snappy.parquet"):
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
+    for f in _parquet_files(data_dir):
+        try:
+            total += os.path.getsize(f)
+        except OSError:
+            pass
     return total
 
 

@@ -38,6 +38,21 @@ TABLES = (
 )
 
 
+def _parquet_files(path: str) -> list[str]:
+    """The data files of a parquet table: ``[path]`` for a file; for a
+    directory, its ``*.parquet`` files at any depth (hive-partitioned
+    ``k=v/`` subdirectories included), sorted. Sidecars (_SUCCESS,
+    .crc) are not data and are skipped."""
+    if not os.path.isdir(path):
+        return [path]
+    return sorted(
+        os.path.join(dp, f)
+        for dp, _dirs, files in os.walk(path)
+        for f in files
+        if f.endswith(".parquet")
+    )
+
+
 def table_rows(sf_dir: str, name: str) -> int | None:
     """Exact row count of a canonical table from parquet FOOTER metadata
     — no Spark job, no data scan (the count is a required field of
@@ -48,17 +63,10 @@ def table_rows(sf_dir: str, name: str) -> int | None:
     try:
         import pyarrow.parquet as pq
 
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.isdir(path):
-            parts = [
-                os.path.join(path, f)
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            ]
-            if not parts:
-                return None
-            return sum(pq.ParquetFile(p).metadata.num_rows for p in parts)
-        return pq.ParquetFile(path).metadata.num_rows
+        files = _parquet_files(os.path.join(sf_dir, f"{name}.parquet"))
+        if not files:
+            return None
+        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
     except Exception:
         return None
 
@@ -71,44 +79,35 @@ def table_bytes(sf_dir: str, name: str) -> int | None:
     the table is absent, unreadable or a directory holding no parquet
     file, so callers can pick their safe side."""
     try:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.isdir(path):
-            # *.parquet only: sidecars (_SUCCESS, .crc) are not data and
-            # would nudge the gate near its threshold (r9 ADVICE, low)
-            sizes = [
-                os.path.getsize(os.path.join(dp, f))
-                for dp, _dirs, files in os.walk(path)
-                for f in files
-                if f.endswith(".parquet")
-            ]
-            return sum(sizes) if sizes else None
-        return os.path.getsize(path)
+        files = _parquet_files(os.path.join(sf_dir, f"{name}.parquet"))
+        if not files:
+            return None
+        return sum(os.path.getsize(f) for f in files)
     except Exception:
         return None
 
 
 def table_fingerprint(sf_dir: str, name: str) -> str | None:
     """Content fingerprint of a canonical table's parquet files: sha256
-    over the sorted (filename, size, mtime_ns) triples — no data read.
-    Derived caches (e.g. the stored kNN delta index) key on this so a
-    REGENERATED dataset at the same path/row-count invalidates them
-    instead of silently serving stale state (r8 ADVICE). None when the
-    table is absent so callers can fall back to an uncached build."""
+    over the sorted (name, size, mtime_ns) triples, names relative to
+    the table directory — no data read. Derived caches (e.g. the stored
+    kNN delta index) key on this so a REGENERATED dataset at the same
+    path/row-count invalidates them instead of silently serving stale
+    state (r8 ADVICE). None when the table is absent or holds no
+    parquet file so callers can fall back to an uncached build."""
     try:
         import hashlib
 
         path = os.path.join(sf_dir, f"{name}.parquet")
-        files = (
-            [os.path.join(path, f) for f in sorted(os.listdir(path))
-             if f.endswith(".parquet")]
-            if os.path.isdir(path)
-            else [path]
-        )
+        files = _parquet_files(path)
+        if not files:
+            return None
+        root = path if os.path.isdir(path) else sf_dir
         h = hashlib.sha256()
         for f in files:
             st = os.stat(f)
             h.update(
-                f"{os.path.basename(f)}|{st.st_size}|{st.st_mtime_ns}\n".encode()
+                f"{os.path.relpath(f, root)}|{st.st_size}|{st.st_mtime_ns}\n".encode()
             )
         return h.hexdigest()
     except Exception:
@@ -124,12 +123,10 @@ def _normalize_ns_timestamps(df: DataFrame, path: str) -> DataFrame:
     try:
         import pyarrow.parquet as pq
 
-        target = path
-        if os.path.isdir(path):
-            inner = [f for f in os.listdir(path) if f.endswith(".parquet")]
-            if not inner:
-                return df
-            target = os.path.join(path, inner[0])
+        files = _parquet_files(path)
+        if not files:
+            return df
+        target = files[0]
         schema = pq.read_schema(target)
     except Exception:
         return df
@@ -195,11 +192,7 @@ def _respread_if_unsplittable(spark: SparkSession, df: DataFrame, path: str) -> 
     try:
         import pyarrow.parquet as pq
 
-        files = (
-            [os.path.join(path, f) for f in sorted(os.listdir(path)) if f.endswith(".parquet")]
-            if os.path.isdir(path)
-            else [path]
-        )
+        files = _parquet_files(path)
         if not files:
             return df
         worst = 0  # largest bytes-per-row-group over a sample of files

@@ -34,15 +34,13 @@ def _event_ts_physical_type(sf_dir: str) -> str:
     """
     import pyarrow.parquet as pq
 
-    path = os.path.join(sf_dir, "events.parquet")
-    target = path
-    if os.path.isdir(path):
-        inner = [f for f in os.listdir(path) if f.endswith(".parquet")]
-        if not inner:
-            return "timestamp[us]"
-        target = os.path.join(path, inner[0])
+    from ..sources.registry import _parquet_files
+
+    files = _parquet_files(os.path.join(sf_dir, "events.parquet"))
+    if not files:
+        return "timestamp[us]"
     try:
-        return str(pq.read_schema(target).field("ts").type)
+        return str(pq.read_schema(files[0]).field("ts").type)
     except Exception:
         return "timestamp[us]"
 

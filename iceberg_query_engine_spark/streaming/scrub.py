@@ -53,16 +53,13 @@ from pyspark.sql import functions as F
 def stream_dedup_pipeline(
     spark: SparkSession,
     sf_dir: str,
-    chunks: int | None = None,
     timings: list | None = None,
     run_dir: str | None = None,
 ) -> DataFrame:
-    """`chunks`/`timings` are experiment knobs (data/exp_stream_scrub_
-    r9.py): the CATALOG entry always runs the default chunk count —
-    the oracle unrolls exactly STREAM_SCRUB_CHUNKS ranges, so a
-    different count is a different (but equally well-defined)
-    landing schedule, not the catalog query. `timings`, if given,
-    receives one {batch, rows, secs} dict per micro-batch.
+    """The batch span lands as STREAM_SCRUB_CHUNKS chunks, exactly the
+    ranges the oracle unrolls. `timings`, if given, receives one
+    {batch, rows, secs} dict per micro-batch (a 10-chunk steady-state
+    run at sf10/sf100 is recorded in data/exp_stream_scrub_r9.json).
 
     `run_dir` pins the run's state root (staging/overlay/ledger/
     checkpoint). Passing the SAME run_dir after a mid-stream crash
@@ -91,8 +88,7 @@ def stream_dedup_pipeline(
     (documents,) = tables(spark, sf_dir, "documents")
     n = table_rows(sf_dir, "documents") or documents.count()
     t = int(PIPE_DELTA_SPLIT * n)
-    if chunks is None:
-        chunks = STREAM_SCRUB_CHUNKS
+    chunks = STREAM_SCRUB_CHUNKS
     # integer cuts, mirrored digit-for-digit by _stream_scrub_sql
     cuts = [t + ((n - t) * k) // chunks for k in range(chunks + 1)]
     base = _pipeline_delta_index_dir(spark, sf_dir, t)

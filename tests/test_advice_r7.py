@@ -150,20 +150,23 @@ def _cc_dirs() -> set[str]:
     return {d for d in os.listdir(root) if d.startswith("cc_labels_")}
 
 
-def test_cc_labels_shallow_graph_creates_no_spill_dir(spark):
+def test_cc_labels_shallow_graph_creates_no_spill_dir(spark, monkeypatch):
+    from iceberg_query_engine_spark.queries import dedup_suite
     from iceberg_query_engine_spark.queries.dedup_suite import cc_labels
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 1), (3, 4), (4, 3)], "src long, dst long"
     )
     before = _cc_dirs()
-    assert cc_labels(edges, local_edge_gate=0).count() == 4
+    monkeypatch.setattr(dedup_suite, "CC_LOCAL_EDGE_GATE", 0)
+    assert cc_labels(edges).count() == 4
     assert _cc_dirs() == before
 
 
-def test_cc_labels_deep_graph_cleans_up_spill_dir(spark):
+def test_cc_labels_deep_graph_cleans_up_spill_dir(spark, monkeypatch):
     """A path graph deep enough to cross the parquet-spill threshold
     must leave no cc_labels_* tree behind — and still converge right."""
+    from iceberg_query_engine_spark.queries import dedup_suite
     from iceberg_query_engine_spark.queries.dedup_suite import cc_labels
 
     n = 3000  # ~log2 diameter rounds with pointer jumping > 12 spill rounds
@@ -174,7 +177,8 @@ def test_cc_labels_deep_graph_cleans_up_spill_dir(spark):
     before = _cc_dirs()
     # force the DISTRIBUTED path: the spill lifecycle under test never
     # engages on the local union-find the toy-size gate would pick
-    labels = cc_labels(edges, local_edge_gate=0)
+    monkeypatch.setattr(dedup_suite, "CC_LOCAL_EDGE_GATE", 0)
+    labels = cc_labels(edges)
     # single component labeled by its minimum, readable AFTER cleanup
     assert labels.filter(F.col("label") != 0).count() == 0
     assert labels.count() == n

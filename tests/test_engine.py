@@ -402,3 +402,17 @@ def test_cli_run_subcommand(spark, sf_oracle, capsys):
 
     assert main(["--sf-dir", sf_oracle, "run", "set_nope"]) == 2
     assert "unknown query" in capsys.readouterr().out
+
+
+def test_cli_query_subcommand(spark, sf_oracle, capsys):
+    """`query --num N` runs adapted TPC-H query N and prints a table;
+    `run --format vertical` renders the same collect path per record."""
+    from iceberg_query_engine_spark.engine import main
+
+    assert main(["--sf-dir", sf_oracle, "query", "--num", "6"]) == 0
+    out = capsys.readouterr().out
+    assert "| revenue" in out and "1 rows (" in out
+
+    assert main(["--sf-dir", sf_oracle, "run", "q6", "--format", "vertical"]) == 0
+    out = capsys.readouterr().out
+    assert "-[ RECORD 1 ]-" in out and "revenue" in out and "1 rows (" in out

@@ -8,7 +8,8 @@ persisted once; below it, recomputation is cheaper than the
 materialization barrier (measured at sf0.1 — the bench keeps the
 ungated shape). These tests pin BOTH gate arms:
 
-- the gate fires exactly on the threshold (env-parameterised),
+- the gate fires exactly on the threshold (tests move the module
+  constant with monkeypatch.setattr),
 - every gated operator returns IDENTICAL rows with the gate forced on
   and off (the persisted plan is an optimization, never a semantics
   change),
@@ -25,6 +26,7 @@ from iceberg_query_engine_spark.queries import (
     events_suite,
     operators_suite,
     text_suite,
+    tpch,
 )
 from iceberg_query_engine_spark.queries.tpch import persist_if_large, tables
 from iceberg_query_engine_spark.sources.registry import table_bytes
@@ -60,14 +62,14 @@ def test_table_bytes_unknown_for_directory_without_parquet(tmp_path):
 
 
 def test_gate_off_below_threshold(spark, sf_smoke, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE_MIN_BYTES", str(1 << 40))
+    monkeypatch.setattr(tpch, "MATERIALIZE_MIN_BYTES", 1 << 40)
     (lineitem,) = tables(spark, sf_smoke, "lineitem")
     df = persist_if_large(lineitem.select("l_orderkey"), sf_smoke, "lineitem")
     assert df.storageLevel.useMemory is False  # not persisted
 
 
 def test_gate_on_above_threshold(spark, sf_smoke, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE_MIN_BYTES", "1")
+    monkeypatch.setattr(tpch, "MATERIALIZE_MIN_BYTES", 1)
     (lineitem,) = tables(spark, sf_smoke, "lineitem")
     df = persist_if_large(lineitem.select("l_orderkey"), sf_smoke, "lineitem")
     try:
@@ -89,9 +91,9 @@ def test_gate_unknown_source_takes_scale_safe_side(spark, sf_smoke):
 
 @pytest.mark.parametrize("op", GATED_OPS, ids=lambda f: f.__name__)
 def test_gated_ops_identical_rows_both_arms(spark, sf_smoke, op, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE_MIN_BYTES", str(1 << 40))
+    monkeypatch.setattr(tpch, "MATERIALIZE_MIN_BYTES", 1 << 40)
     ungated = [tuple(r) for r in op(spark, sf_smoke).collect()]
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE_MIN_BYTES", "1")
+    monkeypatch.setattr(tpch, "MATERIALIZE_MIN_BYTES", 1)
     try:
         gated_df = op(spark, sf_smoke)
         gated = [tuple(r) for r in gated_df.collect()]
@@ -104,7 +106,7 @@ def test_gated_ops_identical_rows_both_arms(spark, sf_smoke, op, monkeypatch):
 def test_gated_ops_persist_fires_above_threshold(
     spark, sf_smoke, op, monkeypatch
 ):
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE_MIN_BYTES", "1")
+    monkeypatch.setattr(tpch, "MATERIALIZE_MIN_BYTES", 1)
     try:
         plan = op(spark, sf_smoke)._jdf.queryExecution().optimizedPlan().toString()
         assert "InMemoryRelation" in plan, f"{op.__name__}: gate did not fire"
@@ -123,7 +125,7 @@ def test_contract_check_single_aggregate_pass(spark, sf_smoke):
 
 
 def test_ks_test_corpus_scans_halved_ungated(spark, sf_smoke, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE_MIN_BYTES", str(1 << 40))
+    monkeypatch.setattr(tpch, "MATERIALIZE_MIN_BYTES", 1 << 40)
     df = operators_suite.op_ks_test(spark, sf_smoke)
     plan = df._jdf.queryExecution().executedPlan().toString()
     scans = sum(

@@ -28,6 +28,7 @@ from iceberg_query_engine_spark.queries import (
     operators_suite,
     similarity_suite,
     text_suite,
+    tpch,
 )
 from iceberg_query_engine_spark.queries.tpch import (
     _GATED_PERSISTS,
@@ -44,7 +45,7 @@ def test_broadcast_hint_only_below_gate(spark, sf_smoke, monkeypatch):
     frame = lineitem.select("l_orderkey").distinct()
     hinted = broadcast_if_small(frame, sf_smoke, "lineitem")
     assert "ResolvedHint" in hinted._jdf.queryExecution().analyzed().toString()
-    monkeypatch.setenv("SPARK_GRAFT_BROADCAST_HINT_MAX_BYTES", "1")
+    monkeypatch.setattr(tpch, "BROADCAST_HINT_MAX_SOURCE_BYTES", 1)
     unhinted = broadcast_if_small(frame, sf_smoke, "lineitem")
     analyzed = unhinted._jdf.queryExecution().analyzed().toString()
     assert "ResolvedHint" not in analyzed
@@ -69,17 +70,9 @@ def test_gated_queries_keep_broadcast_join_at_test_scale(spark, sf_smoke):
         assert pi.broadcast_count(fn(spark, sf_smoke)) >= 1, fn.__name__
 
 
-def test_malformed_env_falls_back(spark, sf_smoke, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE_MIN_BYTES", "not-a-number")
-    (lineitem,) = tables(spark, sf_smoke, "lineitem")
-    # must not raise; sf0.001 lineitem ≪ 256 MB default → gate off
-    df = persist_if_large(lineitem.select("l_orderkey"), sf_smoke, "lineitem")
-    assert df.storageLevel.useMemory is False
-
-
 # ---------------------------------------------------------------- unpersist
 def test_release_gated_persists_drops_caches(spark, sf_smoke, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE_MIN_BYTES", "1")
+    monkeypatch.setattr(tpch, "MATERIALIZE_MIN_BYTES", 1)
     (lineitem,) = tables(spark, sf_smoke, "lineitem")
     df = persist_if_large(lineitem.select("l_orderkey"), sf_smoke, "lineitem")
     assert df.storageLevel.useMemory  # gate fired

@@ -3,6 +3,8 @@ single file OR directory — /root/reference/src/storage/parquet.rs:26-260)."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from iceberg_query_engine_spark.sources.registry import load_table, register_parquet
@@ -57,3 +59,36 @@ def test_respread_guard_restores_scan_parallelism(spark, tmp_path):
         assert "Exchange" not in plan  # untouched: plain scan
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+
+def test_partitioned_directory_footer_helpers(spark, tmp_path):
+    """Hive-partitioned table directories (k=0/, k=1/): the footer
+    helpers see the nested files, and a directory with no parquet file
+    is unknown to all of them."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from iceberg_query_engine_spark.sources.registry import (
+        table_bytes,
+        table_fingerprint,
+        table_rows,
+    )
+
+    sf = str(tmp_path)
+    path = os.path.join(sf, "events.parquet")
+    spark.range(100).withColumn("k", F.col("id") % 2).write.partitionBy("k").parquet(path)
+    assert table_rows(sf, "events") == spark.read.parquet(path).count() == 100
+    assert table_bytes(sf, "events") > 0
+
+    before = table_fingerprint(sf, "events")
+    nested = os.path.join(path, "k=1")
+    victim = os.path.join(nested, sorted(f for f in os.listdir(nested) if f.endswith(".parquet"))[0])
+    pq.write_table(pa.table({"id": list(range(7))}), victim)
+    assert table_fingerprint(sf, "events") != before
+
+    empty = os.path.join(sf, "documents.parquet", "k=0")
+    os.makedirs(empty)
+    open(os.path.join(empty, "_SUCCESS"), "w").close()
+    assert table_rows(sf, "documents") is None
+    assert table_bytes(sf, "documents") is None
+    assert table_fingerprint(sf, "documents") is None
