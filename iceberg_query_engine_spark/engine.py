@@ -118,7 +118,9 @@ class Engine:
         translated = dialect.translate(query)
         t1 = time.perf_counter()
         df = self.spark.sql(translated)
-        df.schema  # force analysis so plan_ms covers Catalyst work
+        # force analysis, optimization and physical planning so plan_ms
+        # covers all of Catalyst (df.schema stops after analysis)
+        df._jdf.queryExecution().executedPlan()  # noqa: SLF001
         t2 = time.perf_counter()
         rows = df.collect()
         t3 = time.perf_counter()

@@ -2031,8 +2031,6 @@ def _delta_ledger(
     ).orderBy("doc_id")
 
 
-_PIPE_DELTA_INDEX_CACHE: dict[str, str] = {}
-
 PIPE_IDX_MAX_BUCKETS = 1024
 
 
@@ -2044,13 +2042,11 @@ def _pipe_idx_buckets(t: int) -> int:
     test-sized corpora don't pay thousands of tiny files. Derived from
     t alone, so the build and every later probe agree without storing
     layout metadata (a formula change is a layout change — bump the
-    version tag in _pipeline_delta_index_dir's dir name with it)."""
+    version tag in _pipeline_delta_index_path's derived_dir name with it)."""
     return max(16, min(PIPE_IDX_MAX_BUCKETS, t // 5000))
 
 
-def _pipeline_delta_index_dir(
-    spark: SparkSession, sf_dir: str, t: int, index_dir: str | None = None
-) -> str:
+def _pipeline_delta_index_path(spark: SparkSession, sf_dir: str, t: int) -> str:
     """Build-once stored state for the INDEXED incremental scrub — the
     three per-doc derivations the stateless delta recomputes every
     batch, written at rest:
@@ -2082,34 +2078,12 @@ def _pipeline_delta_index_dir(
     DIRECTORY listing (static PartitionFilters — the
     sim_knn_graph_delta_indexed posture applied to the scrub's stores).
 
-    Same cache discipline as the kNN delta index (r8 ADVICE, applied
-    from birth here): keyed on a content fingerprint of the documents
-    table, superseded fingerprints reclaimed, completion gated on an
-    `_INDEX_SUCCESS` sentinel written last, and an index_dir override
-    for multi-node deployments (default tempdir is local-mode-only)."""
-    import shutil
-    import tempfile
+    Same cache policy as the kNN delta index (registry.derived_dir):
+    keyed on a content fingerprint of the documents table, served only
+    once all three stores landed."""
+    from ..sources.registry import derived_dir
 
-    from ..sources.registry import table_fingerprint
-
-    fpr = (table_fingerprint(sf_dir, "documents") or "nofp")[:12]
-    key = f"{sf_dir}|{t}|{fpr}|{index_dir or ''}"
-    slug = f"pipe_{sf_dir.strip('/').replace('/', '_')}_{t}"
-    base = os.path.join(index_dir or tempfile.gettempdir(), "pipeline_delta_index")
-    # _v3: key-bucket-partitioned layout + setkey at rest; the
-    # stale-dir reclaim below removes superseded fingerprints AND
-    # superseded layouts alike
-    path = os.path.join(base, f"{slug}_{fpr}_v3")
-    sentinel = os.path.join(path, "_INDEX_SUCCESS")
-    cached = _PIPE_DELTA_INDEX_CACHE.get(key)
-    if cached and os.path.exists(os.path.join(cached, "_INDEX_SUCCESS")):
-        return cached
-    if not os.path.exists(sentinel):
-        if os.path.isdir(base):
-            for d in os.listdir(base):
-                if d.startswith(slug + "_") and d != os.path.basename(path):
-                    shutil.rmtree(os.path.join(base, d), ignore_errors=True)
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         (documents,) = tables(spark, sf_dir, "documents")
         existing_train = documents.filter(
             (F.col("doc_id") < t) & (F.col("source") != "src0")
@@ -2148,16 +2122,15 @@ def _pipeline_delta_index_dir(
             .write.mode("overwrite")
             .parquet(os.path.join(path, "eval_shingles"))
         )
-        with open(sentinel, "w") as fh:
-            fh.write("ok\n")
-    _PIPE_DELTA_INDEX_CACHE[key] = path
-    return path
+
+    # _v3: key-bucket-partitioned layout + setkey at rest
+    return derived_dir(sf_dir, f"pipeline_delta_index_t{t}_v3", ["documents"], build)
 
 
 def dedup_pipeline_delta_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful twin of dedup_pipeline_delta — IDENTICAL output (it
     shares the DuckDB oracle), production cost shape: the corpus-side
-    derivations live AT REST (_pipeline_delta_index_dir: the hash
+    derivations live AT REST (_pipeline_delta_index_path: the hash
     table, the token-free LSH band index, the eval shingle set — built
     once, amortized across batches), so a landing batch pays
 
@@ -2210,14 +2183,13 @@ def _pipeline_delta_indexed(
     spark: SparkSession,
     sf_dir: str,
     split: float,
-    index_dir: str | None = None,
 ) -> DataFrame:
     from ..sources.registry import table_rows
 
     (documents,) = tables(spark, sf_dir, "documents")
     n_total = table_rows(sf_dir, "documents") or documents.count()
     t = int(split * n_total)
-    idx = _pipeline_delta_index_dir(spark, sf_dir, t, index_dir=index_dir)
+    idx = _pipeline_delta_index_path(spark, sf_dir, t)
     batch = documents.filter(F.col("doc_id") >= t)
 
     nb = _pipe_idx_buckets(t)

@@ -1,9 +1,10 @@
 """Driver-visible queries for the iceberg-lite table format.
 
-Each query materializes a two-snapshot partitioned table under /tmp
-from the `orders` source, then exercises snapshot time travel and
-pruned reads; the oracle replays the equivalent filters on the raw
-parquet. (Format parity: reference IcebergScanExec,
+Each query reads an iceberg-lite table built once from the `orders`
+source (registry.derived_dir: keyed on the source's content, served
+only once every build step landed), then exercises snapshot time
+travel and pruned reads; the oracle replays the equivalent filters on
+the raw parquet. (Format parity: reference IcebergScanExec,
 /root/reference/src/physical/operators/iceberg.rs.)
 """
 
@@ -24,20 +25,12 @@ from ..sources.iceberg_lite import (
     write_position_deletes,
     write_snapshot,
 )
+from ..sources.registry import derived_dir, sf_slug
 from .tpch import tables
-
-_CACHE: dict[str, str] = {}
-_DEL_CACHE: dict[str, str] = {}
 
 
 def _table(spark: SparkSession, sf_dir: str) -> str:
-    key = sf_dir
-    if key in _CACHE and os.path.exists(_CACHE[key]):
-        return _CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(), "iceberg_lite", sf_dir.strip("/").replace("/", "_"), "orders"
-    )
-    if not os.path.exists(os.path.join(path, "metadata", "v0.metadata.json")):
+    def build(path: str) -> None:
         (orders,) = tables(spark, sf_dir, "orders")
         write_snapshot(
             orders.filter(F.col("o_orderkey") < 500),
@@ -51,8 +44,8 @@ def _table(spark: SparkSession, sf_dir: str) -> str:
             partition_by="o_orderstatus",
             stats_columns=["o_orderkey", "o_totalprice"],
         )
-    _CACHE[key] = path
-    return path
+
+    return derived_dir(sf_dir, "iceberg_orders", ["orders"], build)
 
 
 def iceberg_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -106,16 +99,8 @@ def _delete_table(spark: SparkSession, sf_dir: str) -> str:
     """orders<500 snapshot → positional delete (o_orderkey % 7 = 0) →
     equality delete (o_orderstatus = 'P') → append 500..999. The final
     state is fully SQL-expressible, so the oracle replays it exactly."""
-    key = sf_dir
-    if key in _DEL_CACHE and os.path.exists(_DEL_CACHE[key]):
-        return _DEL_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "iceberg_lite",
-        sf_dir.strip("/").replace("/", "_"),
-        "orders_del",
-    )
-    if not os.path.exists(os.path.join(path, "metadata", "v0.metadata.json")):
+
+    def build(path: str) -> None:
         (orders,) = tables(spark, sf_dir, "orders")
         write_snapshot(orders.filter(F.col("o_orderkey") < 500), path)
         write_position_deletes(spark, path, "o_orderkey % 7 = 0")
@@ -126,8 +111,8 @@ def _delete_table(spark: SparkSession, sf_dir: str) -> str:
             ["o_orderstatus"],
         )
         write_snapshot(orders.filter(F.col("o_orderkey").between(500, 999)), path)
-    _DEL_CACHE[key] = path
-    return path
+
+    return derived_dir(sf_dir, "iceberg_orders_del", ["orders"], build)
 
 
 def iceberg_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -157,31 +142,20 @@ ORDER BY o_orderstatus
 """
 
 
-_UPSERT_CACHE: dict[str, str] = {}
-
-
 def _upsert_table(spark: SparkSession, sf_dir: str) -> str:
     """orders<500 base snapshot → MERGE-style upsert of every key
     < 600 with o_orderkey % 10 = 0 at o_totalprice + 1000: keys < 500
     are updates (replace), 500..599 are inserts."""
-    key = sf_dir
-    if key in _UPSERT_CACHE and os.path.exists(_UPSERT_CACHE[key]):
-        return _UPSERT_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "iceberg_lite",
-        sf_dir.strip("/").replace("/", "_"),
-        "orders_upsert",
-    )
-    if not os.path.exists(os.path.join(path, "metadata", "v0.metadata.json")):
+
+    def build(path: str) -> None:
         (orders,) = tables(spark, sf_dir, "orders")
         write_snapshot(orders.filter(F.col("o_orderkey") < 500), path)
         batch = orders.filter(
             (F.col("o_orderkey") < 600) & (F.col("o_orderkey") % 10 == 0)
         ).withColumn("o_totalprice", F.col("o_totalprice") + 1000)
         upsert_snapshot(spark, path, batch, ["o_orderkey"])
-    _UPSERT_CACHE[key] = path
-    return path
+
+    return derived_dir(sf_dir, "iceberg_orders_upsert", ["orders"], build)
 
 
 def iceberg_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -244,9 +218,6 @@ ORDER BY o_orderstatus
 """
 
 
-_IVM_CACHE: dict[str, str] = {}
-
-
 def _ivm_agg_table(spark: SparkSession, sf_dir: str) -> str:
     """Incremental view maintenance: an aggregate table (rows/total per
     o_orderstatus) kept current by reading ONLY the new snapshot's rows.
@@ -260,17 +231,10 @@ def _ivm_agg_table(spark: SparkSession, sf_dir: str) -> str:
     and touching just the day's partition: maintenance cost tracks new
     data. Totals are stored UNROUNDED and rounded only at read, so
     repeated maintenance never accumulates rounding drift."""
-    key = sf_dir
-    if key in _IVM_CACHE and os.path.exists(_IVM_CACHE[key]):
-        return _IVM_CACHE[key]
-    base = os.path.join(
-        tempfile.gettempdir(), "iceberg_lite", sf_dir.strip("/").replace("/", "_")
-    )
-    src_path, agg_path = os.path.join(base, "orders_ivm_src"), os.path.join(
-        base, "orders_ivm_agg"
-    )
-    if not os.path.exists(os.path.join(agg_path, "metadata", "v0.metadata.json")):
+
+    def build(base: str) -> None:
         (orders,) = tables(spark, sf_dir, "orders")
+        src_path, agg_path = os.path.join(base, "src"), os.path.join(base, "agg")
         s1 = write_snapshot(orders.filter(F.col("o_orderkey") < 500), src_path)
         write_snapshot(orders.filter(F.col("o_orderkey").between(500, 999)), src_path)
         src = IcebergLiteTable(src_path)
@@ -296,8 +260,9 @@ def _ivm_agg_table(spark: SparkSession, sf_dir: str) -> str:
             )
         )
         upsert_snapshot(spark, agg_path, batch, ["o_orderstatus"])
-    _IVM_CACHE[key] = agg_path
-    return agg_path
+
+    base = derived_dir(sf_dir, "iceberg_orders_ivm", ["orders"], build)
+    return os.path.join(base, "agg")
 
 
 def iceberg_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -392,10 +357,7 @@ def iceberg_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.iceberg_lite import compact, expire_snapshots
 
     path = os.path.join(
-        tempfile.gettempdir(),
-        "iceberg_lite",
-        sf_dir.strip("/").replace("/", "_"),
-        "orders_expire",
+        tempfile.gettempdir(), "iceberg_lite", sf_slug(sf_dir), "orders_expire"
     )
     # expiry MUTATES table state: rebuild fresh each call (idempotence)
     shutil.rmtree(path, ignore_errors=True)
@@ -452,10 +414,7 @@ def iceberg_scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     path = os.path.join(
-        tempfile.gettempdir(),
-        "iceberg_lite",
-        sf_dir.strip("/").replace("/", "_"),
-        "cust_scd2",
+        tempfile.gettempdir(), "iceberg_lite", sf_slug(sf_dir), "cust_scd2"
     )
     shutil.rmtree(path, ignore_errors=True)
     (customer,) = tables(spark, sf_dir, "customer")
@@ -501,9 +460,6 @@ FROM customer WHERE c_custkey < 200 ORDER BY c_custkey
 """
 
 
-_WAP_CACHE: dict[str, str] = {}
-
-
 def _wap_table(spark: SparkSession, sf_dir: str) -> str:
     """Write-audit-publish fixture: main gets orders < 800; a GOOD
     batch (800–999) lands on branch `audit`, passes the audit and is
@@ -512,35 +468,7 @@ def _wap_table(spark: SparkSession, sf_dir: str) -> str:
     dropped — main must never see it."""
     from ..sources.iceberg_lite import create_branch, create_tag, drop_ref, fast_forward
 
-    def _complete(p: str) -> bool:
-        """The 7-step build is done iff the final ref state holds — a
-        crash mid-build must trigger a rebuild, not poison the cache
-        (the metadata file alone appears after step 1)."""
-        if not os.path.exists(os.path.join(p, "metadata", "v0.metadata.json")):
-            return False
-        try:
-            t = IcebergLiteTable(p)
-            refs = t.refs()
-            return (
-                "v1" in refs
-                and "audit" in refs
-                and "audit_bad" not in refs
-                and refs["main"]["snapshot_id"] == refs["audit"]["snapshot_id"]
-            )
-        except Exception:
-            return False
-
-    key = sf_dir
-    if key in _WAP_CACHE and os.path.exists(_WAP_CACHE[key]):
-        return _WAP_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(), "iceberg_lite", sf_dir.strip("/").replace("/", "_"),
-        "orders_wap",
-    )
-    if not _complete(path):
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         (orders,) = tables(spark, sf_dir, "orders")
         write_snapshot(orders.filter(F.col("o_orderkey") < 800), path)
         create_tag(path, "v1")
@@ -571,8 +499,8 @@ def _wap_table(spark: SparkSession, sf_dir: str) -> str:
         )
         assert n_bad > 0, "bad batch must fail its audit"
         drop_ref(path, "audit_bad")
-    _WAP_CACHE[key] = path
-    return path
+
+    return derived_dir(sf_dir, "iceberg_orders_wap", ["orders"], build)
 
 
 def iceberg_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -676,9 +604,6 @@ ORDER BY snapshot_id
 """
 
 
-_ORPHAN_CACHE: dict[str, str] = {}
-
-
 def _orphan_table(spark: SparkSession, sf_dir: str) -> str:
     """Two committed snapshots (orders <500, 500..999) plus planted
     uncommitted data files (orders 1000..1199) — the debris a crashed
@@ -686,24 +611,11 @@ def _orphan_table(spark: SparkSession, sf_dir: str) -> str:
     import glob
     import shutil
 
-    key = sf_dir
-    if key in _ORPHAN_CACHE and os.path.exists(_ORPHAN_CACHE[key]):
-        return _ORPHAN_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "iceberg_lite",
-        sf_dir.strip("/").replace("/", "_"),
-        "orders_orphan",
-    )
-    if not os.path.exists(os.path.join(path, "metadata", "v0.metadata.json")):
+    def build(path: str) -> None:
         (orders,) = tables(spark, sf_dir, "orders")
         write_snapshot(orders.filter(F.col("o_orderkey") < 500), path)
         write_snapshot(orders.filter(F.col("o_orderkey").between(500, 999)), path)
-    if not os.path.exists(os.path.join(path, "data", "orphan-0.parquet")):
         # plant the crashed write: data files bypassing the commit
-        # (separate guard: a crash between the snapshot writes and the
-        # plant must not leave a cached orphan-free fixture behind)
-        (orders,) = tables(spark, sf_dir, "orders")
         tmp = os.path.join(path, "_orphan_build")
         orders.filter(F.col("o_orderkey").between(1000, 1199)).coalesce(
             2
@@ -711,8 +623,8 @@ def _orphan_table(spark: SparkSession, sf_dir: str) -> str:
         for i, src in enumerate(sorted(glob.glob(os.path.join(tmp, "*.parquet")))):
             os.replace(src, os.path.join(path, "data", f"orphan-{i}.parquet"))
         shutil.rmtree(tmp, ignore_errors=True)
-    _ORPHAN_CACHE[key] = path
-    return path
+
+    return derived_dir(sf_dir, "iceberg_orders_orphan", ["orders"], build)
 
 
 def iceberg_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -754,9 +666,6 @@ ORDER BY kind
 """
 
 
-_EVO_CACHE: dict[str, str] = {}
-
-
 def _evo_table(spark: SparkSession, sf_dir: str) -> str:
     """Schema-evolution fixture: snapshot 1 under (o_orderkey,
     o_totalprice); then RENAME o_totalprice→price and ADD channel
@@ -764,16 +673,7 @@ def _evo_table(spark: SparkSession, sf_dir: str) -> str:
     Deterministic, so the oracle replays both eras from raw orders."""
     from ..sources.iceberg_lite import add_column, rename_column
 
-    key = sf_dir
-    if key in _EVO_CACHE and os.path.exists(_EVO_CACHE[key]):
-        return _EVO_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "iceberg_lite",
-        sf_dir.strip("/").replace("/", "_"),
-        "orders_evo",
-    )
-    if not os.path.exists(os.path.join(path, "metadata", "v0.metadata.json")):
+    def build(path: str) -> None:
         (orders,) = tables(spark, sf_dir, "orders")
         write_snapshot(
             orders.filter(F.col("o_orderkey") < 500).select(
@@ -791,8 +691,8 @@ def _evo_table(spark: SparkSession, sf_dir: str) -> str:
             ),
             path,
         )
-    _EVO_CACHE[key] = path
-    return path
+
+    return derived_dir(sf_dir, "iceberg_orders_evo", ["orders"], build)
 
 
 def iceberg_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -824,23 +724,12 @@ ORDER BY channel ASC NULLS FIRST
 """
 
 
-_PEVO_CACHE: dict[str, str] = {}
-
-
 def _pevo_table(spark: SparkSession, sf_dir: str) -> str:
     """Partition-evolution fixture: snapshot 1 UNPARTITIONED
     (orders < 500), snapshot 2 partitioned by o_orderstatus
     (500..999) — two specs live in one table, as Iceberg allows."""
-    key = sf_dir
-    if key in _PEVO_CACHE and os.path.exists(_PEVO_CACHE[key]):
-        return _PEVO_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "iceberg_lite",
-        sf_dir.strip("/").replace("/", "_"),
-        "orders_pevo",
-    )
-    if not os.path.exists(os.path.join(path, "metadata", "v0.metadata.json")):
+
+    def build(path: str) -> None:
         (orders,) = tables(spark, sf_dir, "orders")
         write_snapshot(orders.filter(F.col("o_orderkey") < 500), path)
         write_snapshot(
@@ -848,8 +737,8 @@ def _pevo_table(spark: SparkSession, sf_dir: str) -> str:
             path,
             partition_by="o_orderstatus",
         )
-    _PEVO_CACHE[key] = path
-    return path
+
+    return derived_dir(sf_dir, "iceberg_orders_pevo", ["orders"], build)
 
 
 def iceberg_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -884,9 +773,6 @@ ORDER BY o_orderstatus
 """
 
 
-_RB_CACHE: dict[str, str] = {}
-
-
 def _rb_table(spark: SparkSession, sf_dir: str) -> str:
     """Rollback fixture, built in one shot to a FIXED final state:
     snapshots 1..3 append orders [<300, 300..599, 600..899]; the third
@@ -895,24 +781,15 @@ def _rb_table(spark: SparkSession, sf_dir: str) -> str:
     replays both the final chain and the rollback point."""
     from ..sources.iceberg_lite import rollback_to_snapshot
 
-    key = sf_dir
-    if key in _RB_CACHE and os.path.exists(_RB_CACHE[key]):
-        return _RB_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "iceberg_lite",
-        sf_dir.strip("/").replace("/", "_"),
-        "orders_rb",
-    )
-    if not os.path.exists(os.path.join(path, "metadata", "v0.metadata.json")):
+    def build(path: str) -> None:
         (orders,) = tables(spark, sf_dir, "orders")
         write_snapshot(orders.filter(F.col("o_orderkey") < 300), path)
         write_snapshot(orders.filter(F.col("o_orderkey").between(300, 599)), path)
         write_snapshot(orders.filter(F.col("o_orderkey").between(600, 899)), path)
         rollback_to_snapshot(path, 2)
         write_snapshot(orders.filter(F.col("o_orderkey").between(900, 1199)), path)
-    _RB_CACHE[key] = path
-    return path
+
+    return derived_dir(sf_dir, "iceberg_orders_rb", ["orders"], build)
 
 
 def iceberg_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:

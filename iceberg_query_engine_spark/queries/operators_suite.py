@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..operators.joins import asof_join, range_join_bucketed
 from ..operators.rank import ntile_by_range, ranked_by_range
+from ..sources.registry import derived_dir, sf_slug
 from .tpch import broadcast_if_small, persist_if_large, tables
 
 
@@ -264,7 +265,7 @@ def op_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     same key — pay the shuffle once at write time, never at read."""
     from ..sources.bucketed import write_bucketed
 
-    key = sf_dir.strip("/").replace("/", "_").replace(".", "_")
+    key = sf_slug(sf_dir).replace(".", "_")
     lt, rt = f"bj_orders_{key}", f"bj_lineitem_{key}"
     if not (spark.catalog.tableExists(lt) and spark.catalog.tableExists(rt)):
         orders, lineitem = tables(spark, sf_dir, "orders", "lineitem")
@@ -416,30 +417,16 @@ FROM lineitem
 """
 
 
-_PART_CACHE: dict[str, str] = {}
-
-
 def _partitioned_events(spark: SparkSession, sf_dir: str) -> str:
     """events written Hive-partitioned by event_type (directory per
     value) — the write-side layout that turns a predicate on the
     partition column into directory-level pruning at read."""
-    import os
-    import tempfile
 
-    key = sf_dir
-    if key in _PART_CACHE and os.path.exists(_PART_CACHE[key]):
-        return _PART_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "spark_partitioned",
-        sf_dir.strip("/").replace("/", "_"),
-        "events",
-    )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    def build(path: str) -> None:
         (events,) = tables(spark, sf_dir, "events")
         events.write.mode("overwrite").partitionBy("event_type").parquet(path)
-    _PART_CACHE[key] = path
-    return path
+
+    return derived_dir(sf_dir, "events_by_type", ["events"], build)
 
 
 def op_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:

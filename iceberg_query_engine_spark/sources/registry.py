@@ -19,6 +19,7 @@ Column-level normalization applied at registration:
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -90,9 +91,9 @@ def table_bytes(sf_dir: str, name: str) -> int | None:
 def table_fingerprint(sf_dir: str, name: str) -> str | None:
     """Content fingerprint of a canonical table's parquet files: sha256
     over the sorted (name, size, mtime_ns) triples, names relative to
-    the table directory — no data read. Derived caches (e.g. the stored
-    kNN delta index) key on this so a REGENERATED dataset at the same
-    path/row-count invalidates them instead of silently serving stale
+    the table directory — no data read. derived_dir keys every
+    build-once artifact on this so a REGENERATED dataset at the same
+    path/row-count invalidates it instead of silently serving stale
     state (r8 ADVICE). None when the table is absent or holds no
     parquet file so callers can fall back to an uncached build."""
     try:
@@ -112,6 +113,65 @@ def table_fingerprint(sf_dir: str, name: str) -> str | None:
         return h.hexdigest()
     except Exception:
         return None
+
+
+def sf_slug(sf_dir: str) -> str:
+    """A dataset directory as one path component (``/data/sf0.1`` →
+    ``data_sf0.1``), for per-dataset scratch and artifact dirs."""
+    return sf_dir.strip("/").replace("/", "_")
+
+
+DERIVED_SENTINEL = "_INDEX_SUCCESS"
+
+
+def derived_dir(
+    sf_dir: str,
+    name: str,
+    sources: Sequence[str],
+    build: Callable[[str], None],
+) -> str:
+    """Build-once directory for an on-disk artifact derived from the
+    canonical tables `sources` of `sf_dir` (an iceberg-lite fixture, a
+    partitioned copy, a stored index). Returns its path:
+
+        <tempdir>/sg_derived/<sf slug>/<name>/<fp12>/
+
+    fp12 keys the artifact on the CONTENT of its sources (the first 12
+    hex chars of a digest over their table_fingerprints), so a dataset
+    regenerated at the same path gets a new directory instead of a
+    stale artifact. A directory is served only once its
+    `_INDEX_SUCCESS` sentinel exists; otherwise every entry under
+    <name>/ — superseded fingerprints and any partial build a crash
+    left — is deleted, `build(path)` fills a fresh empty `path`, and
+    the sentinel is written last. Anything else the artifact depends on
+    (a split point, a layout version) belongs in `name`. When a source
+    has no fingerprint the artifact cannot be keyed and is rebuilt on
+    every call. The root follows tempfile.gettempdir(), so TMPDIR
+    places it (on a cluster: storage every executor can reach)."""
+    import hashlib
+    import shutil
+    import tempfile
+
+    fps = [table_fingerprint(sf_dir, s) for s in sources]
+    key = None
+    if all(fps):
+        h = hashlib.sha256()
+        for s, fp in zip(sources, fps):
+            h.update(f"{s}={fp}\n".encode())
+        key = h.hexdigest()[:12]
+    base = os.path.join(tempfile.gettempdir(), "sg_derived", sf_slug(sf_dir), name)
+    path = os.path.join(base, key or "unkeyed")
+    sentinel = os.path.join(path, DERIVED_SENTINEL)
+    if key and os.path.exists(sentinel):
+        return path
+    if os.path.isdir(base):
+        for d in os.listdir(base):
+            shutil.rmtree(os.path.join(base, d), ignore_errors=True)
+    os.makedirs(path)
+    build(path)
+    with open(sentinel, "w") as fh:
+        fh.write("ok\n")
+    return path
 
 
 def _normalize_ns_timestamps(df: DataFrame, path: str) -> DataFrame:

@@ -18,12 +18,14 @@ micro-batches, exactly the backfill pattern used on a real cluster.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
 def _event_ts_physical_type(sf_dir: str) -> str:
     """Read the parquet footer's type for events.ts (e.g. 'timestamp[us]').
@@ -93,18 +95,25 @@ def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def run_available_now(writer: DataStreamWriter, name: str) -> None:
+    """Run a one-shot stream over all available data under a private
+    checkpoint, then delete the checkpoint: nothing resumes a one-shot
+    run, and its output (memory-sink table, foreachBatch writes) lives
+    elsewhere."""
+    ckpt = os.path.join(tempfile.gettempdir(), "sg_ckpt", f"{name}-{uuid.uuid4().hex}")
+    try:
+        writer.option("checkpointLocation", ckpt).trigger(
+            availableNow=True
+        ).start().awaitTermination()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
 def _run_to_completion(df: DataFrame, name: str) -> None:
     """Drive a streaming aggregation over all available data, then stop."""
-    ckpt = os.path.join(tempfile.gettempdir(), "sg_ckpt", f"{name}-{uuid.uuid4().hex}")
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        df.writeStream.format("memory").queryName(name).outputMode("complete"), name
     )
-    q.awaitTermination()
 
 
 def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -272,16 +281,9 @@ def stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") <= F.col("p_ts")),
     )
     name = "mem_stream_join"
-    ckpt = os.path.join(tempfile.gettempdir(), "sg_ckpt", f"{name}-{uuid.uuid4().hex}")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        joined.writeStream.format("memory").queryName(name).outputMode("append"), name
     )
-    q.awaitTermination()
     return (
         spark.table(name)
         .groupBy(F.col("p_user").alias("user_id"))
@@ -331,16 +333,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.sum("value"), 4).alias("total_value"),
     )
     name = "mem_stream_static_enrich"
-    ckpt = os.path.join(tempfile.gettempdir(), "sg_ckpt", f"{name}-{uuid.uuid4().hex}")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_to_completion(agg, name)
     return spark.table(name).orderBy("segment")
 
 
@@ -390,16 +383,9 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = read_event_stream(spark, sf_dir)
     deduped = events.withWatermark("ts", "2 hours").dropDuplicates(["user_id", "event_type"])
     name = "mem_stream_dedup"
-    ckpt = os.path.join(tempfile.gettempdir(), "sg_ckpt", f"{name}-{uuid.uuid4().hex}")
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        deduped.writeStream.format("memory").queryName(name).outputMode("append"), name
     )
-    q.awaitTermination()
     return (
         spark.table(name)
         .groupBy("event_type")
@@ -469,16 +455,7 @@ def stream_foreach_batch_to_parquet(
             .parquet(out_dir)
         )
 
-    ckpt = os.path.join(
-        tempfile.gettempdir(), "sg_ckpt", f"feb-{uuid.uuid4().hex}"
-    )
-    q = (
-        events.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(events.writeStream.foreachBatch(sink), "feb")
     return n_batches["n"]
 
 
@@ -532,14 +509,7 @@ def stream_upsert_iceberg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     events = read_event_stream(spark, sf_dir)
     sink = upsert_user_totals_sink(path)
-    ckpt = os.path.join(tempfile.gettempdir(), "sg_ckpt", f"ui-{uuid.uuid4().hex}")
-    q = (
-        events.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(events.writeStream.foreachBatch(sink), "ui")
     t = IcebergLiteTable(path)
     return (
         t.read(spark)

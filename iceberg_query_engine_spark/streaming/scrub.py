@@ -10,7 +10,7 @@ sequential chunk files and consumed with maxFilesPerTrigger=1, so the
 replay is deterministic. Per micro-batch, foreachBatch:
 
   1. probes the build-once BASE index (dedup_suite.
-     _pipeline_delta_index_dir — shared, read-only, directory-gated)
+     _pipeline_delta_index_path — shared, read-only, directory-gated)
      UNIONED with an OVERLAY this stream maintains,
   2. appends the batch's disposition rows to the ledger,
   3. absorbs the batch into the overlay (its content hashes, token-free
@@ -78,7 +78,7 @@ def stream_dedup_pipeline(
         _delta_ledger,
         _delta_stages_from_stores,
         _pipe_idx_buckets,
-        _pipeline_delta_index_dir,
+        _pipeline_delta_index_path,
         _read_store_pruned,
         _shingled_docs,
     )
@@ -91,7 +91,7 @@ def stream_dedup_pipeline(
     chunks = STREAM_SCRUB_CHUNKS
     # integer cuts, mirrored digit-for-digit by _stream_scrub_sql
     cuts = [t + ((n - t) * k) // chunks for k in range(chunks + 1)]
-    base = _pipeline_delta_index_dir(spark, sf_dir, t)
+    base = _pipeline_delta_index_path(spark, sf_dir, t)
     nb = _pipe_idx_buckets(t)
     n_bands = N_HASHES // CLUSTER_BAND_SIZE
 

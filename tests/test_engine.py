@@ -416,3 +416,26 @@ def test_cli_query_subcommand(spark, sf_oracle, capsys):
     assert main(["--sf-dir", sf_oracle, "run", "q6", "--format", "vertical"]) == 0
     out = capsys.readouterr().out
     assert "-[ RECORD 1 ]-" in out and "revenue" in out and "1 rows (" in out
+
+
+def test_engine_plan_ms_covers_all_catalyst_phases(engine, monkeypatch):
+    """plan_ms spans analysis, optimization AND physical planning, so
+    execute_ms is execution only: on a multi-join TPC-H query it is at
+    least the sum of the three phases Spark's own tracker records."""
+    from iceberg_query_engine_spark.queries.tpch import Q5_SQL
+
+    built = []
+    real = engine.spark.sql
+
+    def capture(query, *args, **kwargs):
+        built.append(real(query, *args, **kwargs))
+        return built[-1]
+
+    monkeypatch.setattr(engine.spark, "sql", capture)
+    res = engine.sql(Q5_SQL)
+    phases = built[0]._jdf.queryExecution().tracker().phases()
+    spent = {
+        p: phases.get(p).get().durationMs()
+        for p in ("analysis", "optimization", "planning")
+    }
+    assert res.metrics.plan_ms >= sum(spent.values()), (res.metrics, spent)

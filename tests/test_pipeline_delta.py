@@ -9,6 +9,8 @@ min-doc_id-per-hash keeper on both paths).
 
 from __future__ import annotations
 
+import tempfile
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -89,7 +91,7 @@ def test_exact_stage_agrees_with_full_rebuild(spark, sf_oracle, ledger):
     assert delta_exact == full_exact
 
 
-def test_indexed_star_branches_parity_on_overcap_corpus(spark, tmp_path):
+def test_indexed_star_branches_parity_on_overcap_corpus(spark, tmp_path, monkeypatch):
     """The indexed delta's batch-sided pair generation (r9: star pairs
     are emitted ONLY for batch members — an over-cap bucket's existing
     membership never pays token refetch or verification) must agree
@@ -113,7 +115,6 @@ def test_indexed_star_branches_parity_on_overcap_corpus(spark, tmp_path):
     from iceberg_query_engine_spark.queries.dedup_suite import (
         _pipeline_delta,
         _pipeline_delta_indexed,
-        _PIPE_DELTA_INDEX_CACHE,
     )
     from tests.test_lsh_skew_bound import _minhash_sig
 
@@ -159,11 +160,8 @@ def test_indexed_star_branches_parity_on_overcap_corpus(spark, tmp_path):
         os.path.join(tmp_path, "documents.parquet")
     )
 
-    _PIPE_DELTA_INDEX_CACHE.clear()
-    idx_dir = str(tmp_path / "idx")
-    indexed = _pipeline_delta_indexed(
-        spark, str(tmp_path), 0.9, index_dir=idx_dir
-    ).collect()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "idx"))
+    indexed = _pipeline_delta_indexed(spark, str(tmp_path), 0.9).collect()
     stateless = _pipeline_delta(spark, str(tmp_path), 0.9).collect()
     assert [tuple(r) for r in indexed] == [tuple(r) for r in stateless]
 
@@ -181,42 +179,40 @@ def test_indexed_star_branches_parity_on_overcap_corpus(spark, tmp_path):
     # pruned-path parity: a 2-doc batch engages the static pruning gate
     # (batch_docs * n_bands <= nb // 2 at nb = 16) — same ledger from
     # pruned directory reads
-    _PIPE_DELTA_INDEX_CACHE.clear()
-    pruned = _pipeline_delta_indexed(
-        spark, str(tmp_path), 1.0 - 2 / n, index_dir=str(tmp_path / "idx2")
-    ).collect()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "idx2"))
+    pruned = _pipeline_delta_indexed(spark, str(tmp_path), 1.0 - 2 / n).collect()
     control = _pipeline_delta(spark, str(tmp_path), 1.0 - 2 / n).collect()
     assert [tuple(r) for r in pruned] == [tuple(r) for r in control]
 
 
-def test_indexed_twin_bit_parity_and_index_reuse(spark, sf_oracle, tmp_path):
+def test_indexed_twin_bit_parity_and_index_reuse(
+    spark, sf_oracle, tmp_path, monkeypatch
+):
     """dedup_pipeline_delta_indexed must produce the identical ledger
     from its stored index (it shares the stateless twin's oracle), the
-    index must land under the caller's index_dir, and a second call
-    must REUSE it (no rebuild)."""
+    index must land under the tempdir root, and a second call must
+    REUSE it (no rebuild)."""
     import os
 
     from iceberg_query_engine_spark.queries.dedup_suite import (
-        _PIPE_DELTA_INDEX_CACHE,
         _pipeline_delta_indexed,
         dedup_pipeline_delta,
     )
+    from iceberg_query_engine_spark.sources.registry import sf_slug
 
     idx_parent = str(tmp_path / "idx")
-    _PIPE_DELTA_INDEX_CACHE.clear()
-    indexed = _pipeline_delta_indexed(
-        spark, sf_oracle, PIPE_DELTA_SPLIT, index_dir=idx_parent
-    ).collect()
+    monkeypatch.setattr(tempfile, "tempdir", idx_parent)
+    indexed = _pipeline_delta_indexed(spark, sf_oracle, PIPE_DELTA_SPLIT).collect()
     stateless = dedup_pipeline_delta(spark, sf_oracle).collect()
     assert [tuple(r) for r in indexed] == [tuple(r) for r in stateless]
-    root = os.path.join(idx_parent, "pipeline_delta_index")
+    (name,) = os.listdir(os.path.join(idx_parent, "sg_derived", sf_slug(sf_oracle)))
+    assert name.startswith("pipeline_delta_index_")
+    root = os.path.join(idx_parent, "sg_derived", sf_slug(sf_oracle), name)
     (built,) = os.listdir(root)
     assert os.path.exists(os.path.join(root, built, "_INDEX_SUCCESS"))
     marker = os.path.join(root, built, "hashes")
     mtime = os.path.getmtime(marker)
-    again = _pipeline_delta_indexed(
-        spark, sf_oracle, PIPE_DELTA_SPLIT, index_dir=idx_parent
-    ).collect()
+    again = _pipeline_delta_indexed(spark, sf_oracle, PIPE_DELTA_SPLIT).collect()
     assert os.path.getmtime(marker) == mtime, "index was rebuilt on reuse"
     assert [tuple(r) for r in again] == [tuple(r) for r in stateless]
 

@@ -91,3 +91,27 @@ def test_checkpoint_resume_processes_only_new_files(spark, sf_smoke, tmp_path):
         .groupBy("user_id").agg(F.count(F.lit(1)).alias("n")).collect()
     }
     assert counts2 == batch2
+
+
+def _ckpt_dirs() -> set[str]:
+    import tempfile
+
+    root = os.path.join(tempfile.gettempdir(), "sg_ckpt")
+    return set(os.listdir(root)) if os.path.isdir(root) else set()
+
+
+def test_one_shot_streams_leave_no_checkpoint(spark, sf_smoke):
+    """The suite's one-shot stream_* queries start a fresh checkpoint
+    that nothing resumes: it must be gone once the query returns, for
+    memory sinks and foreachBatch sinks alike — while a result that
+    reads its sink lazily stays readable."""
+    from iceberg_query_engine_spark.streaming.jobs import (
+        stream_tumbling,
+        stream_upsert_iceberg,
+    )
+
+    before = _ckpt_dirs()
+    assert stream_tumbling(spark, sf_smoke).count() > 0
+    upserted = stream_upsert_iceberg(spark, sf_smoke)
+    assert _ckpt_dirs() == before
+    assert upserted.count() > 0

@@ -34,7 +34,7 @@ import pytest
 from iceberg_query_engine_spark.queries.dedup_suite import (
     PIPE_DELTA_SPLIT,
     STREAM_SCRUB_SQL,
-    _pipeline_delta_index_dir,
+    _pipeline_delta_index_path,
     dedup_pipeline_delta,
 )
 from iceberg_query_engine_spark.streaming.scrub import stream_dedup_pipeline
@@ -168,7 +168,7 @@ def test_base_index_never_mutated(spark, synth_dir):
     build-once index (also used by dedup_pipeline_delta_indexed) must
     be byte-stable across a whole stream run."""
     t = int(PIPE_DELTA_SPLIT * 60)
-    base = _pipeline_delta_index_dir(spark, synth_dir, t)
+    base = _pipeline_delta_index_path(spark, synth_dir, t)
 
     def snap() -> dict[str, tuple[int, float]]:
         out = {}
